@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import layout
 from .litutil import fast_array_literal, jvm_epoch
 
 
@@ -676,89 +677,12 @@ def ivf_search_index(
     )
 
 
-def ivf_recover_index(index_path: str) -> int:
-    """Crash-recovery sweep for a cell-partitioned index directory.
-
-    A compaction/migration run that died mid-swap leaves ``_old_cell=N``
-    asides. Between the crash and the next maintenance run every plain
-    reader of the index is DOWN (measured on Spark 4: partition inference
-    sees ``_old_cell`` as a conflicting second partition column and the
-    read fails with CONFLICTING_PARTITION_COLUMN_NAMES — loud, not the
-    silent partial index ADVICE r15 hypothesized, but broken until
-    someone sweeps). The sweep restores the
-    invariant at any time, not just at the next maintenance run: if the
-    live twin is missing, the aside IS the cell (rename it back); if both
-    exist the aside is a stale pre-swap copy (sweep it). Idempotent;
-    single-writer contract (never run concurrently with a maintenance
-    job on the same index). Returns the number of asides resolved.
-    """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    resolved = 0
-    for old_dir in _glob.glob(_os.path.join(index_path, "_old_cell=*")):
-        live = _os.path.join(
-            index_path, _os.path.basename(old_dir).removeprefix("_old_")
-        )
-        if _os.path.exists(live):
-            _shutil.rmtree(old_dir, ignore_errors=True)
-        else:
-            _os.rename(old_dir, live)
-        resolved += 1
-    return resolved
-
-
 def ivf_open_index(spark, index_path: str) -> DataFrame:
     """Open a cell-partitioned IVF parquet index for READING, running the
-    crash-recovery sweep first (ADVICE r15: a mid-swap crash otherwise
-    hides a cell from every reader until the next compaction happens to
-    run). This is the read-path twin of the sweep
-    :func:`ivf_compact_index` / :func:`ivf_retrain_migrate` run before
-    writing."""
-    ivf_recover_index(index_path)
-    # out-of-band mutations (sweep, a caller's copytree) invalidate the
-    # session's shared file-listing cache for this path (the r16 bucket
-    # store lesson) — refresh before reading
-    spark.catalog.refreshByPath(index_path)
-    return spark.read.parquet(index_path)
-
-
-def _swap_cell_dirs(index_path: str, aside: str, cells: list[int]) -> None:
-    """Move ``cell=N`` directories from ``aside`` over the live index via
-    the crash-recoverable aside-and-swap (single-writer contract;
-    concurrent readers may briefly miss a mid-swap cell): the live dir
-    renames to ``_old_cell=N`` before the new one moves in, so a crash at
-    any instant leaves the cell's data on disk — as the live dir, the
-    hidden aside, or both — and :func:`ivf_recover_index` restores the
-    invariant. A cell with no live twin (migration created it) just moves
-    in.
-
-    OBJECT-STORE MAPPING (the 100 TB commit protocol — POSIX rename is a
-    test-scaffold stand-in, not the design): on S3/GCS this sequence is a
-    table-format transaction, not directory renames. Delta Lake's
-    ``OPTIMIZE`` / Iceberg's rewrite_data_files express exactly this
-    operator: write new files alongside old ones, then commit ONE
-    manifest/log entry that atomically swaps which files are live —
-    readers see wholly-old or wholly-new (snapshot isolation), crash
-    recovery is "uncommitted files are invisible" (no sweep needed), and
-    concurrent-reader gaps disappear. When the environment grows Delta
-    (``sources.formats.delta_available()``), the swap body becomes a
-    single ``OPTIMIZE ... WHERE cell IN (...)`` / ``REPLACE WHERE``
-    commit; the touched-cells planning above it is unchanged.
-    """
-    import os as _os
-    import shutil as _shutil
-
-    for c in cells:
-        dst = _os.path.join(index_path, f"cell={c}")
-        src = _os.path.join(aside, f"cell={c}")
-        old = _os.path.join(index_path, f"_old_cell={c}")
-        _shutil.rmtree(old, ignore_errors=True)
-        if _os.path.exists(dst):
-            _os.rename(dst, old)
-        _os.rename(src, dst)
-        _shutil.rmtree(old, ignore_errors=True)
+    crash-recovery sweep first (``sources.layout.store_open``): a
+    mid-swap crash otherwise breaks every reader until the next
+    compaction happens to run."""
+    return layout.store_open(spark, index_path, ["cell"])
 
 
 def ivf_compact_index(
@@ -773,87 +697,19 @@ def ivf_compact_index(
     implementation_details.md:71, is the same disease on row tables —
     cured there by ``sources/layout.compact_small_files``).
 
-    Delta-to-base merge with cell REBALANCE: each cell is rewritten into
-    AT MOST ``ceil(rows / target_rows_per_file)`` files (hash slotting —
-    slot collisions within a task can merge target files, so individual
-    files may exceed the target by small factors; the guarantee is the
-    fragment-count ceiling, not an exact per-file row count), so
-    probe-side scan cost returns to O(data), not O(fragments). Only FRAGMENTED cells pay —
-    a cell already at or under its target file count is left untouched
-    (file mtimes preserved), which is what makes the job O(touched
-    partitions) at 100 TB, never O(index): a daily upsert touches a few
-    cells; compaction rewrites exactly those.
-
-    Per-cell row counts come from one bounded aggregate (n_cells rows);
-    the rewrite's only shuffle is ``repartition(cell, slot)`` where
-    ``slot = pmod(xxhash64(id), files_for_cell)`` — deterministic,
-    data-independent slotting within each cell. Rewritten cells replace
-    their directories via a crash-recoverable aside-and-swap
-    (single-writer contract; a crash leaves a state the next run's
-    recovery sweep restores).
+    Delta-to-base merge with cell REBALANCE: each fragmented cell is
+    rewritten into AT MOST ``ceil(rows / target_rows_per_file)`` files, so
+    probe-side scan cost returns to O(data), not O(fragments); a cell
+    already at or under its target is left untouched (mtimes preserved).
+    Planning, slotting and the crash-recoverable swap are
+    ``sources.layout.store_compact``.
 
     Returns ``(compacted_index_df, n_files_before, n_files_after,
     n_cells_rewritten)``.
     """
-    import glob as _glob
-    import math as _math
-    import os as _os
-    import shutil as _shutil
-
-    def _cell_files(root: str) -> dict[int, list[str]]:
-        out: dict[int, list[str]] = {}
-        for d in _glob.glob(_os.path.join(root, "cell=*")):
-            cell = int(_os.path.basename(d).split("=", 1)[1])
-            out[cell] = sorted(_glob.glob(_os.path.join(d, "part-*")))
-        return out
-
-    # crash RECOVERY before anything else (shared sweep — also invoked on
-    # the read path by ivf_open_index): makes every compaction run a
-    # recovery point, not just the cells it happens to touch.
-    ivf_recover_index(index_path)
-    spark.catalog.refreshByPath(index_path)
-
-    before = _cell_files(index_path)
-    n_before = sum(len(v) for v in before.values())
-    idx = spark.read.parquet(index_path)
-    # bounded: one row per cell
-    counts = {
-        r["cell"]: r["n"]
-        for r in idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    targets = {
-        c: max(1, _math.ceil(n / target_rows_per_file)) for c, n in counts.items()
-    }
-    touched = sorted(
-        c for c in counts if len(before.get(c, ())) > targets[c]
+    return layout.store_compact(
+        spark, index_path, ["cell"], "vec_id", target_rows_per_file
     )
-    if touched:
-        slot_map = F.create_map(
-            *[F.lit(x) for c in touched for x in (c, targets[c])]
-        )
-        frag = idx.filter(F.col("cell").isin(touched))
-        rewritten = frag.withColumn(
-            "_slot", F.pmod(F.xxhash64("vec_id"), slot_map[F.col("cell")])
-        )
-        aside = index_path + "__compacting"
-        _shutil.rmtree(aside, ignore_errors=True)
-        (
-            rewritten.repartition(
-                sum(targets[c] for c in touched), F.col("cell"), F.col("_slot")
-            )
-            .drop("_slot")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(aside)
-        )
-        # crash-recoverable per-cell swap; see _swap_cell_dirs for the
-        # POSIX contract and the object-store (Delta OPTIMIZE) mapping
-        _swap_cell_dirs(index_path, aside, touched)
-        _shutil.rmtree(aside, ignore_errors=True)
-        # the swap replaced files behind the listing cache's back
-        spark.catalog.refreshByPath(index_path)
-    n_after = sum(len(v) for v in _cell_files(index_path).values())
-    return spark.read.parquet(index_path), n_before, n_after, len(touched)
 
 
 def align_centroids(
@@ -926,7 +782,8 @@ def ivf_retrain_migrate(
        stayers in untouched cells never rewrite, their files keep mtimes).
        The rewrite shuffles O(touched-cells' rows), never O(index), and
        swaps in via the shared crash-recoverable aside-and-swap
-       (:func:`_swap_cell_dirs`; Delta ``OPTIMIZE``-commit mapping there).
+       (``sources.layout.store_commit``; Delta ``OPTIMIZE``-commit mapping
+       there), which also removes a touched cell left with no rows.
 
     Pass ``new_centroids`` through :func:`align_centroids` first (the
     certification queries do) — unaligned retrained centroids renumber
@@ -937,12 +794,7 @@ def ivf_retrain_migrate(
     ``ivf_assign_cells(corpus, new_centroids)`` rebuild — pytest-pinned;
     searches against it must use ``new_centroids``.
     """
-    import os as _os
-    import shutil as _shutil
-
-    ivf_recover_index(index_path)
-    spark.catalog.refreshByPath(index_path)
-    idx = spark.read.parquet(index_path)
+    idx = layout.store_open(spark, index_path, ["cell"])
     assign1 = nearest_cells_pandas(new_centroids, 1)
     # Persisted for the life of this call: the moves aggregate AND the
     # touched-cell rewrite both need every vector's new_cell, and without
@@ -971,8 +823,6 @@ def ivf_retrain_migrate(
     touched = sorted({r["cell"] for r in moves} | {r["new_cell"] for r in moves})
     n_moved = sum(r["n"] for r in moves)
     if touched:
-        aside = index_path + "__migrating"
-        _shutil.rmtree(aside, ignore_errors=True)
         # dropDuplicates makes a RE-RUN exact after a mid-migration crash:
         # cell swaps commit one directory at a time, so a crash between a
         # mover's destination swap and its source swap leaves the row in
@@ -981,34 +831,15 @@ def ivf_retrain_migrate(
         # the recovery sweep restores READABILITY at any time; re-running
         # the migration restores EXACTNESS (idempotent). The shuffle is
         # O(touched cells' rows), never O(index).
-        (
+        layout.store_commit(
+            index_path,
+            ["cell"],
+            [f"cell={c}" for c in touched],
             reassigned.filter(F.col("new_cell").isin(touched))
             .select(id_col, vec_col, F.col("new_cell").alias("cell"))
             .dropDuplicates([id_col])
-            .repartition(len(touched), F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(aside)
+            .repartition(len(touched), F.col("cell")),
         )
-        # a touched cell can end up EMPTY (everyone left, nobody arrived):
-        # the writer emits no directory for it — rename-aside then delete,
-        # so a crash at any instant leaves the rows recoverable and a
-        # re-run converges
-        empty = [
-            c
-            for c in touched
-            if not _os.path.exists(_os.path.join(aside, f"cell={c}"))
-        ]
-        _swap_cell_dirs(index_path, aside, [c for c in touched if c not in empty])
-        for c in empty:
-            live = _os.path.join(index_path, f"cell={c}")
-            old = _os.path.join(index_path, f"_old_cell={c}")
-            if _os.path.exists(live):
-                _shutil.rmtree(old, ignore_errors=True)
-                _os.rename(live, old)
-                _shutil.rmtree(old, ignore_errors=True)
-        _shutil.rmtree(aside, ignore_errors=True)
-        spark.catalog.refreshByPath(index_path)
     reassigned.unpersist()
     return spark.read.parquet(index_path), n_moved, len(touched)
 

@@ -9785,7 +9785,7 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`~..operators.similarity.ivf_retrain_migrate` rewrites exactly
     the cells whose membership changed (O(touched), crash-recoverable
     aside-and-swap; Delta ``OPTIMIZE``-commit mapping in
-    ``_swap_cell_dirs``). Certification:
+    ``sources.layout.store_commit``). Certification:
 
     * ``migration_lossless`` — (count, vec_id-digest) of the migrated
       index equals the full corpus: no vector dropped or duplicated by

@@ -31,6 +31,11 @@ uniform-ish key domains.
 
 from __future__ import annotations
 
+import glob
+import math
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -280,7 +285,11 @@ def write_zordered_table(
 
 
 def read_zordered_table(spark, path: str) -> DataFrame:
-    """Read a managed z-ordered table without its maintenance columns."""
+    """Read a managed z-ordered table without its maintenance columns,
+    running :func:`recover_zorder_table` first: a stale ``__zp=k.old``
+    left by a crashed compaction would otherwise be read as a partition."""
+    if recover_zorder_table(path):
+        spark.catalog.refreshByPath(path)
     return spark.read.parquet(path).drop(_ZP, _ZC)
 
 
@@ -438,3 +447,187 @@ def compact_zorder_incremental(spark, path: str, delta: DataFrame) -> dict:
     os.remove(intent)
     shutil.rmtree(tmp)
     return {"touched": len(touched), "total": len(m["cuts"]) + 1}
+
+
+# ===========================================================================
+# Partitioned-store lifecycle (the IVF cell index, the MinHash bucket store).
+#
+# Both curation stores grow by appends that land one small fragment per
+# touched leaf directory per arrival (the reference's ``flush.size=1``
+# pathology, IMPL:71). The cure is the same for any store partitioned by
+# ``part_cols``: compact only the fragmented leaves, stage the rewrite under
+# ``<path>__compacting`` and swap it in leaf by leaf through an ``_old_``
+# aside that the read-path sweep resolves after a crash. Single-writer
+# contract: never run two maintenance jobs on one store at once.
+#
+# Unlike ``compact_zorder_incremental`` this needs no commit marker: every
+# rewrite is a pure function of the rows already in the store, so after a
+# crash the sweep restores readability and a rerun restores exactness.
+# ===========================================================================
+
+_ASIDE = "_old_"
+_STAGED_SUFFIX = "__compacting"
+
+
+def _leaf_glob(path: str, part_cols: list[str], aside: bool = False) -> str:
+    *parents, leaf = part_cols
+    return os.path.join(
+        path,
+        *[f"{c}=*" for c in parents],
+        f"{_ASIDE if aside else ''}{leaf}=*",
+    )
+
+
+def _leaf_files(path: str, part_cols: list[str]) -> dict[str, list[str]]:
+    """Relative leaf dir (``band=0/bh_part=3``) -> its sorted data files."""
+    return {
+        os.path.relpath(d, path): sorted(glob.glob(os.path.join(d, "part-*")))
+        for d in glob.glob(_leaf_glob(path, part_cols))
+    }
+
+
+def _leaf_key(part_cols: list[str]) -> Column:
+    """The relative leaf dir of each row, as a partition-column-only
+    expression (so filters on it prune directories)."""
+    return F.concat_ws(
+        "/", *[F.concat(F.lit(f"{c}="), F.col(c).cast("string")) for c in part_cols]
+    )
+
+
+def store_recover(path: str, part_cols: list[str]) -> int:
+    """Crash-recovery sweep: resolve every ``_old_<leaf col>=<v>`` aside a
+    dead swap left behind. Until swept, Spark's partition inference sees
+    the aside as a conflicting partition column and every plain reader
+    fails (CONFLICTING_PARTITION_COLUMN_NAMES). If the live twin is
+    missing the aside IS the leaf (rename it back); if both exist the
+    aside is a stale pre-swap copy (delete it). A glob bounded by the
+    partition depth, not a recursive walk, so it is cheap enough to run
+    on every open. Idempotent. Returns the number of asides resolved."""
+    resolved = 0
+    for old in glob.glob(_leaf_glob(path, part_cols, aside=True)):
+        live = os.path.join(
+            os.path.dirname(old), os.path.basename(old).removeprefix(_ASIDE)
+        )
+        if os.path.exists(live):
+            shutil.rmtree(old, ignore_errors=True)
+        else:
+            os.rename(old, live)
+        resolved += 1
+    return resolved
+
+
+def store_open(spark, path: str, part_cols: list[str]) -> DataFrame:
+    """Open a partitioned store for reading: sweep, then refresh the
+    session's shared file-listing cache (a sweep or an out-of-band copy
+    changes files behind it, and a stale listing serves deleted files),
+    then read."""
+    store_recover(path, part_cols)
+    spark.catalog.refreshByPath(path)
+    return spark.read.parquet(path)
+
+
+def store_commit(
+    path: str, part_cols: list[str], leaves: list[str], rows: DataFrame
+) -> None:
+    """Replace the leaf dirs ``leaves`` (relative, as ``_leaf_files``
+    names them) with ``rows``: stage ``rows`` partitioned by
+    ``part_cols`` under ``<path>__compacting``, then swap leaf by leaf. A
+    listed leaf with no staged twin (its rows all left) is removed.
+
+    Each swap renames the live leaf to its ``_old_`` aside before the
+    staged leaf moves in, so a crash at any instant leaves the leaf's
+    data on disk as the live dir, the aside, or both, and
+    :func:`store_recover` restores a readable store. Concurrent readers
+    may briefly miss a mid-swap leaf.
+
+    Object-store mapping: POSIX rename is a stand-in here. On S3/GCS this
+    sequence is one table-format transaction: Delta Lake ``OPTIMIZE`` /
+    Iceberg ``rewrite_data_files`` write the new files beside the old and
+    commit one log entry that swaps which files are live, so readers see
+    wholly-old or wholly-new and uncommitted files are simply invisible
+    (no sweep). When Delta is available
+    (``streaming.pipeline.delta_available()``), this body becomes one
+    ``REPLACE WHERE <leaf in leaves>`` commit; the planning that picks
+    ``leaves`` is unchanged.
+    """
+    staged = path + _STAGED_SUFFIX
+    shutil.rmtree(staged, ignore_errors=True)
+    rows.write.mode("overwrite").partitionBy(*part_cols).parquet(staged)
+    for leaf in leaves:
+        live = os.path.join(path, leaf)
+        new = os.path.join(staged, leaf)
+        old = os.path.join(
+            os.path.dirname(live), _ASIDE + os.path.basename(live)
+        )
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(live):
+            os.rename(live, old)
+        if os.path.exists(new):
+            os.rename(new, live)
+        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(staged, ignore_errors=True)
+    rows.sparkSession.catalog.refreshByPath(path)
+
+
+def store_compact(
+    spark,
+    path: str,
+    part_cols: list[str],
+    id_col: str,
+    target_rows_per_file: int,
+) -> tuple[DataFrame, int, int, int]:
+    """Compact the fragmented leaves of a partitioned store in place.
+
+    A leaf with more files than ``ceil(rows / target_rows_per_file)`` is
+    rewritten into at most that many files; every other leaf keeps its
+    files (mtimes preserved), so the job is O(touched leaves), never
+    O(store). Per-leaf row counts come from the parquet footers (no Spark
+    job); the rewrite's only shuffle is ``repartition(*part_cols, slot)``
+    over the touched leaves' rows with ``slot = pmod(xxhash64(id),
+    files_for_leaf)``. Hash slotting can merge slots within a task, so a
+    file may exceed the target; the guarantee is the file-count ceiling.
+    Rewritten leaves commit through :func:`store_commit`. Runs the sweep
+    first, so every compaction is also a recovery point.
+
+    Returns ``(store_df, n_files_before, n_files_after, n_leaves_rewritten)``.
+    """
+    import pyarrow.parquet as pq
+
+    store_recover(path, part_cols)
+    spark.catalog.refreshByPath(path)
+    before = _leaf_files(path, part_cols)
+    targets = {
+        leaf: max(
+            1,
+            math.ceil(
+                sum(pq.read_metadata(f).num_rows for f in files)
+                / target_rows_per_file
+            ),
+        )
+        for leaf, files in before.items()
+    }
+    touched = sorted(
+        leaf for leaf, files in before.items() if len(files) > targets[leaf]
+    )
+    if touched:
+        key = _leaf_key(part_cols)
+        slots = F.create_map(
+            *[F.lit(x) for leaf in touched for x in (leaf, targets[leaf])]
+        )
+        store_commit(
+            path,
+            part_cols,
+            touched,
+            spark.read.parquet(path)
+            .filter(key.isin(touched))
+            .withColumn("_slot", F.pmod(F.xxhash64(id_col), slots[key]))
+            .repartition(
+                sum(targets[leaf] for leaf in touched),
+                *[F.col(c) for c in part_cols],
+                F.col("_slot"),
+            )
+            .drop("_slot"),
+        )
+    n_before = sum(len(v) for v in before.values())
+    n_after = sum(len(v) for v in _leaf_files(path, part_cols).values())
+    return spark.read.parquet(path), n_before, n_after, len(touched)

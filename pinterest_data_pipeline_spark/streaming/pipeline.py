@@ -1252,17 +1252,9 @@ def incremental_dedup_store_sink(
         finally:
             decisions.unpersist()
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_store_sink(
+        stream_docs, apply_batch, work_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_incremental_dedup_roundtrip(
@@ -1287,16 +1279,13 @@ def availablenow_incremental_dedup_roundtrip(
     Returns the accumulated decisions table with the directory-encoded
     ``batch`` id surfaced as ``arrival`` (1-based).
     """
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = incremental_dedup_store_sink(
-        stream, work_dir, base_sigs, base_docs, text_col, id_col,
-        threshold, available_now=True,
+    _run_landed(
+        spark, work_dir, arrivals,
+        lambda stream: incremental_dedup_store_sink(
+            stream, work_dir, base_sigs, base_docs, text_col, id_col,
+            threshold, available_now=True,
+        ),
     )
-    query.awaitTermination()
     return spark.read.parquet(os.path.join(work_dir, "decisions")).withColumn(
         "arrival", (F.col("batch") + 1).cast("int")
     ).drop("batch")
@@ -1321,19 +1310,51 @@ def _committed_batch_dirs(root: str, before: int) -> list[str]:
     )
 
 
-def _landed_stream(spark: SparkSession, work_dir: str, arrivals: list[DataFrame]):
-    """Land each arrival frame as ONE file (sequential writes, distinct
-    mtimes) and open a ``maxFilesPerTrigger=1`` file-source stream over
-    the landing dir, so arrival k IS micro-batch k — the determinism
-    pin every oracle-checkable streaming roundtrip needs."""
+def _start_store_sink(
+    stream: DataFrame,
+    apply_batch,
+    work_dir: str,
+    checkpoint_dir: str | None,
+    available_now: bool,
+):
+    """Start a store-maintenance ``foreachBatch`` sink: update mode, the
+    checkpoint under ``work_dir`` unless one is given, optionally one
+    ``availableNow`` run."""
+    writer = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .outputMode("update")
+        .option(
+            "checkpointLocation",
+            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
+        )
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _run_landed(
+    spark: SparkSession, work_dir: str, arrivals: list[DataFrame], start_sink
+) -> None:
+    """Wipe ``work_dir``, land each arrival frame as ONE file (sequential
+    writes, distinct mtimes), open a ``maxFilesPerTrigger=1`` file-source
+    stream over the landing dir and run ``start_sink(stream)`` to
+    completion — arrival k IS micro-batch k, the determinism pin every
+    oracle-checkable streaming roundtrip needs, and repeated runs replay
+    identically."""
+    import shutil
+
+    if os.path.exists(work_dir):
+        shutil.rmtree(work_dir)
     landing = os.path.join(work_dir, "landing")
     for arr in arrivals:
         arr.coalesce(1).write.mode("append").parquet(landing)
-    return (
+    stream = (
         spark.readStream.schema(arrivals[0].schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
+    start_sink(stream).awaitTermination()
 
 
 def ivf_stream_upsert_sink(
@@ -1368,17 +1389,9 @@ def ivf_stream_upsert_sink(
             os.path.join(delta_root, f"batch={batch_id}")
         )
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_store_sink(
+        stream_vecs, apply_batch, work_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_ivf_upsert_roundtrip(
@@ -1392,15 +1405,12 @@ def availablenow_ivf_upsert_roundtrip(
     accumulated index DELTA (all committed batches, cell column intact).
     ``work_dir`` is wiped per call — repeated driver/parity/bench
     invocations replay identically."""
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = ivf_stream_upsert_sink(
-        stream, work_dir, centroids, available_now=True
+    _run_landed(
+        spark, work_dir, arrivals,
+        lambda stream: ivf_stream_upsert_sink(
+            stream, work_dir, centroids, available_now=True
+        ),
     )
-    query.awaitTermination()
     dirs = _committed_batch_dirs(os.path.join(work_dir, "delta"), 1 << 62)
     out = spark.read.parquet(dirs[0])
     for p in dirs[1:]:
@@ -1450,17 +1460,9 @@ def kmv_stream_merge_sink(
             os.path.join(sketch_root, f"batch={batch_id}")
         )
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_store_sink(
+        stream_docs, apply_batch, work_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_kmv_merge_roundtrip(
@@ -1475,15 +1477,12 @@ def availablenow_kmv_merge_roundtrip(
     landing file per arrival, file == micro-batch) and return the
     per-batch sketch VERSIONS in batch order (version i = the store
     sketch after arrival i). ``work_dir`` is wiped per call."""
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = kmv_stream_merge_sink(
-        stream, work_dir, base_sketch, text_col, k, available_now=True
+    _run_landed(
+        spark, work_dir, arrivals,
+        lambda stream: kmv_stream_merge_sink(
+            stream, work_dir, base_sketch, text_col, k, available_now=True
+        ),
     )
-    query.awaitTermination()
     return [
         spark.read.parquet(p)
         for p in _committed_batch_dirs(

@@ -221,6 +221,24 @@ def test_recover_rolls_forward_after_commit_marker(spark, tmp_path):
     assert got.count() == n  # no duplicated partition rows
 
 
+def test_read_runs_recovery_after_commit_marker_crash(spark, tmp_path):
+    """The read path sweeps too: in the post-commit crash state a plain
+    ``read_zordered_table`` (no explicit recovery call) must not read the
+    stale ``__zp=k.old`` copy as an extra partition."""
+    import os
+    import shutil
+
+    path, rows = _small_managed_table(spark, tmp_path)
+    p1 = os.path.join(path, _partition_dirs(path)[0])
+    shutil.copytree(p1, p1 + ".old")
+    with open(os.path.join(path, layout._COMMIT_MARKER), "w") as f:
+        f.write(_partition_dirs(path)[0])
+
+    got = layout.read_zordered_table(spark, path)
+    assert got.count() == rows.count()
+    assert not os.path.exists(p1 + ".old")
+
+
 def test_compaction_retry_after_crash_is_duplicate_free(spark, tmp_path):
     """The medium-severity r3 ADVICE case: a crash mid-swap followed by a
     retry with the SAME delta must not union the delta twice into the

@@ -702,3 +702,105 @@ def test_gated_retrain_untriggered_never_rewrites(spark, tmp_path):
         spark, path, _new_centroids()
     )
     assert n_moved == 5 and n_touched == 2
+
+
+# --- shared partitioned-store lifecycle (sources/layout.store_*) ------------
+
+import pytest
+
+from pinterest_data_pipeline_spark.sources import layout
+
+
+def test_retrain_migrate_removes_emptied_cell(spark, tmp_path):
+    """Retrained centroids that pull every member out of cell 3: the
+    touched cell has no staged twin, so the shared swap removes its
+    directory; no aside is left and the rowset equals the rebuild."""
+    import glob
+
+    path = _build_index(spark, tmp_path, "empty_idx")
+    # unit-norm centroids: cell 2 leans toward dim 3, cell 3 points away
+    # from every member, so anchors 2 and 3 and the outliers all land in 2
+    new_c = [ANCHORS[0], ANCHORS[1], [0.0, 0.0, 0.6, 0.8], [-1.0, 0.0, 0.0, 0.0]]
+    migrated, n_moved, n_touched = similarity.ivf_retrain_migrate(
+        spark, path, new_c
+    )
+    assert (n_moved, n_touched) == (10, 2)
+    assert not os.path.exists(os.path.join(path, "cell=3"))
+    assert glob.glob(os.path.join(path, "_old_*")) == []
+    assert _rowset(migrated) == _rowset(
+        similarity.ivf_assign_cells(_corpus(spark), new_c)
+    )
+
+
+def _fragmented_ivf(spark, tmp_path):
+    corpus = _corpus(spark)
+    path = os.path.join(str(tmp_path), "frag_idx")
+    similarity.ivf_assign_cells(
+        corpus.filter(F.col("vec_id") < 30), ANCHORS
+    ).write.partitionBy("cell").parquet(path)
+    similarity.ivf_assign_cells(
+        corpus.filter(F.col("vec_id") >= 30), ANCHORS
+    ).repartition(4).write.mode("append").partitionBy("cell").parquet(path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "build, open_store, compact, part_cols, target",
+    [
+        pytest.param(
+            _fragmented_ivf, similarity.ivf_open_index,
+            similarity.ivf_compact_index, ["cell"], 4096, id="ivf",
+        ),
+        pytest.param(
+            _bucket_store, dedup.bucket_store_open,
+            dedup.bucket_store_compact, ["band", "bh_part"], 65536,
+            id="bucket",
+        ),
+    ],
+)
+def test_compaction_crash_in_shared_swap_recovers(
+    spark, tmp_path, monkeypatch, build, open_store, compact, part_cols, target
+):
+    """A crash injected into the real swap — the second ``os.rename`` of
+    the compaction, i.e. after the first touched leaf moved aside and
+    before its rewrite moved in — leaves a store whose open returns the
+    pre-compaction rowset; a rerun converges to the file ceiling with the
+    same rowset and no aside left behind."""
+    import glob
+    import math
+
+    import pyarrow.parquet as pq
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.drop("embedding").collect())
+
+    path = build(spark, tmp_path)
+    spark.catalog.refreshByPath(path)
+    before = rows(spark.read.parquet(path))
+    real_rename = layout.os.rename
+    calls = []
+
+    def crashing_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(layout.os, "rename", crashing_rename)
+        with pytest.raises(OSError, match="injected crash"):
+            compact(spark, path)
+    asides = glob.glob(os.path.join(path, "**", "_old_*"), recursive=True)
+    assert len(asides) == 1
+    assert rows(open_store(spark, path)) == before
+
+    compacted, _, _, n_touched = compact(spark, path)
+    assert n_touched > 0
+    assert rows(compacted) == before
+    leaves = glob.glob(os.path.join(path, *[f"{c}=*" for c in part_cols]))
+    assert leaves
+    for leaf in leaves:
+        files = glob.glob(os.path.join(leaf, "part-*"))
+        n = sum(pq.read_metadata(f).num_rows for f in files)
+        assert len(files) <= max(1, math.ceil(n / target)), leaf
+    assert glob.glob(os.path.join(path, "**", "_old_*"), recursive=True) == []
