@@ -7760,6 +7760,29 @@ def _cached_store(
     return spark.read.parquet(path)
 
 
+def _digest_match(
+    left: DataFrame, right: DataFrame, cols: list[str], name: str, *left_aggs
+) -> DataFrame:
+    """One-row losslessness certificate of the incremental store family:
+    boolean ``name`` is TRUE when ``left`` and ``right`` agree on row count
+    and on ``sum(pmod(xxhash64(cols), 1_000_000_007))`` — no row dropped,
+    duplicated or moved. ``left_aggs`` ride the left digest's scan and
+    come out as further columns."""
+
+    def digest(df: DataFrame, sfx: str, *extra) -> DataFrame:
+        return df.agg(
+            F.count(F.lit(1)).alias(f"n{sfx}"),
+            F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_000_007))).alias(f"d{sfx}"),
+            *extra,
+        )
+
+    both = digest(left, "", *left_aggs).crossJoin(digest(right, "2"))
+    return both.select(
+        ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2"))).alias(name),
+        *[c for c in both.columns if c not in ("n", "d", "n2", "d2")],
+    )
+
+
 def fs_linkage_weights(
     spark: SparkSession,
     sf_dir: str,
@@ -9237,29 +9260,13 @@ def ann_ivf_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("append").partitionBy("cell").parquet(work)
     )
     compacted, n_before, n_after, _ = similarity.ivf_compact_index(spark, work)
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.pmod(F.xxhash64("vec_id", "cell"), F.lit(1_000_000_007))
-            ).alias("d"),
-        )
-
-    lossless = (
-        digest(compacted)
-        .crossJoin(
-            digest(
-                spark.read.parquet(base_path)
-                .select("vec_id", "cell")
-                .unionByName(delta.select("vec_id", "cell"))
-            ).withColumnsRenamed({"n": "n2", "d": "d2"})
-        )
-        .select(
-            ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2"))).alias(
-                "compaction_lossless"
-            )
-        )
+    lossless = _digest_match(
+        compacted,
+        spark.read.parquet(base_path)
+        .select("vec_id", "cell")
+        .unionByName(delta.select("vec_id", "cell")),
+        ["vec_id", "cell"],
+        "compaction_lossless",
     )
     q = _query_vectors(spark, sf_dir)
     ann = similarity.ivf_search_index(compacted, q, centroids, k=10, n_probe=4)
@@ -9833,37 +9840,17 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-misassignment check (stored cell == nearest NEW centroid, the
     # same Arrow kernel as before, now fused into the digest scan).
     assign1 = similarity.nearest_cells_pandas(new_centroids, 1)
-    mig_cert = migrated.select(
-        "vec_id",
-        (F.col("cell").cast("int") != assign1(F.col("embedding"))[0])
-        .cast("long")
-        .alias("bad"),
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000_007))
-        ).alias("d"),
+    cert = _digest_match(
+        migrated.select(
+            "vec_id",
+            (F.col("cell").cast("int") != assign1(F.col("embedding"))[0])
+            .cast("long")
+            .alias("bad"),
+        ),
+        emb,
+        ["vec_id"],
+        "migration_lossless",
         (F.sum("bad") == 0).alias("migrated_assign_ok"),
-    )
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000_007))
-            ).alias("d"),
-        )
-
-    cert = (
-        mig_cert.crossJoin(
-            digest(emb).withColumnsRenamed({"n": "n2", "d": "d2"})
-        )
-        .select(
-            ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2"))).alias(
-                "migration_lossless"
-            ),
-            "migrated_assign_ok",
-        )
     )
     q = _query_vectors(spark, sf_dir)
     ann = similarity.ivf_search_index(migrated, q, new_centroids, k=10, n_probe=4)
@@ -9887,11 +9874,11 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_incremental_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-driven incremental dedup store maintenance (VERDICT r15
     item 2): the signature store absorbs arrivals through the engine's
-    OWN streaming runtime — a file-source ``readStream`` with one
-    landing file per arrival and ``maxFilesPerTrigger=1``, so arrival k
-    is exactly micro-batch k — instead of the batch calls the r14/r15
-    entries drive. Each trigger dedups its documents against the store
-    AS OF the previous trigger (store ∪ kept arrivals < k) and appends
+    OWN streaming runtime — a file-source ``readStream`` drained by one
+    ``availableNow`` run per arrival over the sink's checkpoint, so
+    arrival k is exactly micro-batch k — instead of the batch calls the
+    r14/r15 entries drive. Each trigger dedups its documents against the
+    store AS OF the previous trigger (store ∪ kept arrivals < k) and appends
     kept signatures + documents as batch-id-named delta directories
     (``incremental_dedup_store_sink``'s replay-idempotent layout; the
     Delta ``txnAppId`` analogue).
@@ -10004,34 +9991,14 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
         "band", "bh_part"
     ).parquet(work)
     compacted, n_before, n_after, _ = dedup.bucket_store_compact(spark, work)
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64("band", "bh_part", "band_hash", "doc_id"),
-                    F.lit(1_000_000_007),
-                )
-            ).alias("d"),
-        )
-
-    lossless = (
-        digest(compacted)
-        .crossJoin(
-            digest(
-                spark.read.parquet(base_path)
-                .select("band", "bh_part", "band_hash", "doc_id")
-                .unionByName(
-                    delta.select("band", "bh_part", "band_hash", "doc_id")
-                )
-            ).withColumnsRenamed({"n": "n2", "d": "d2"})
-        )
-        .select(
-            ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2"))).alias(
-                "compaction_lossless"
-            )
-        )
+    cols = ["band", "bh_part", "band_hash", "doc_id"]
+    lossless = _digest_match(
+        compacted,
+        spark.read.parquet(base_path)
+        .select(*cols)
+        .unionByName(delta.select(*cols)),
+        cols,
+        "compaction_lossless",
     )
     decisions, _delta = dedup.incremental_minhash_dedup(
         batch, None, store_docs, "text", "doc_id", threshold=0.3,
@@ -10049,9 +10016,9 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
 def ann_ivf_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-driven IVF index maintenance (VERDICT r15 item 2, ANN
     member): vector arrivals reach the index through the engine's OWN
-    streaming runtime — a file-source ``readStream`` with one landing
-    file per arrival and ``maxFilesPerTrigger=1`` (arrival k == micro-
-    batch k) — instead of the batch call ``ann_ivf_incremental_upsert``
+    streaming runtime — a file-source ``readStream`` drained by one
+    ``availableNow`` run per arrival (arrival k == micro-batch k) —
+    instead of the batch call ``ann_ivf_incremental_upsert``
     drives. Each trigger assigns its vectors to the FIXED stored
     centroids (O(batch) Arrow kernel, FAISS ``IVF.add`` — no retrain, no
     store read) and lands a cell-partitioned, batch-id-named delta
@@ -10087,26 +10054,7 @@ def ann_ivf_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = streaming_pipeline.availablenow_ivf_upsert_roundtrip(
         spark, _work_dir(sf_dir, "_ivf_stream_upsert"), arrivals, centroids
     ).select("vec_id", "embedding", F.col("cell").cast("int").alias("cell"))
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000_007))
-            ).alias("d"),
-        )
-
-    lossless = (
-        digest(delta)
-        .crossJoin(
-            digest(batch_pop).withColumnsRenamed({"n": "n2", "d": "d2"})
-        )
-        .select(
-            ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2"))).alias(
-                "delta_lossless"
-            )
-        )
-    )
+    lossless = _digest_match(delta, batch_pop, ["vec_id"], "delta_lossless")
     merged = index.unionByName(delta)
     q = _query_vectors(spark, sf_dir)
     ann = similarity.ivf_search_index(merged, q, centroids, k=10, n_probe=4)
@@ -10130,7 +10078,7 @@ def ann_ivf_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sketch_kmv_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-driven KMV vocabulary monitoring (VERDICT r15 item 2,
     sketch member): document arrivals merge into the persisted KMV
-    sketch through the engine's own streaming runtime (file == micro-
+    sketch through the engine's own streaming runtime (arrival == micro-
     batch), versioned per batch so replay is exact
     (``kmv_stream_merge_sink``). KMV is closed under union, so each
     stream-maintained version must equal the from-scratch sketch of
@@ -10235,15 +10183,6 @@ def ann_ivf_drift_gated_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         params="n_cells=16",
     )
 
-    def digest(df: DataFrame, n2: bool = False) -> DataFrame:
-        sfx = "2" if n2 else ""
-        return df.agg(
-            F.count(F.lit(1)).alias(f"n{sfx}"),
-            F.sum(
-                F.pmod(F.xxhash64("vec_id", "cell"), F.lit(1_000_000_007))
-            ).alias(f"d{sfx}"),
-        )
-
     # one batch-assignment pass, not one per gate: both branches append
     # the IDENTICAL (id, vec, cell) arrival rows, so score the batch
     # against the stored centroids once and let the second append read
@@ -10270,13 +10209,11 @@ def ann_ivf_drift_gated_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             similarity.ivf_retrain_migrate(spark, work, expect)
         else:
             expect = old_centroids
-        match = (
-            digest(similarity.ivf_open_index(spark, work))
-            .crossJoin(digest(similarity.ivf_assign_cells(emb, expect), True))
-            .select(
-                ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2")))
-                .alias("index_matches_rebuild")
-            )
+        match = _digest_match(
+            similarity.ivf_open_index(spark, work),
+            similarity.ivf_assign_cells(emb, expect),
+            ["vec_id", "cell"],
+            "index_matches_rebuild",
         )
         row = match.select(
             F.lit(tag).alias("gate"),

@@ -22,6 +22,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# derived_shuffle_partitions' floor on useful per-partition input and its
+# large-input partition size.
+MIN_TASK_BYTES = 2 * 1024**2
+TARGET_PARTITION_BYTES = 128 * 1024**2
+
 
 def _dir_bytes(path: str) -> int:
     """Total bytes under ``path`` (0 if missing) — cheap os.walk, no Spark."""
@@ -56,32 +61,38 @@ def derived_shuffle_partitions(cpus: int) -> int:
         partitions = min(ceil(bytes / min_task_bytes),
                          max(cpus,  ceil(bytes / target_bytes)))
 
-    * ``min_task_bytes`` (default 2 MB, env ``SPARK_GRAFT_MIN_TASK_BYTES``)
-      is the floor on useful per-partition input: below it, task overhead
-      dominates (the measured local sweet spot above).
-    * ``target_bytes`` (default 128 MB, env
-      ``SPARK_GRAFT_TARGET_PARTITION_BYTES``) is the guide's 100 MB-1 GB
-      partition sizing for large inputs; once data outgrows the cores the
-      count grows as bytes/target (e.g. 100 TB -> ~800k partitions), the
-      textbook cluster posture.
+    * ``min_task_bytes`` (:data:`MIN_TASK_BYTES`, 2 MB) is the floor on
+      useful per-partition input: below it, task overhead dominates (the
+      measured local sweet spot above).
+    * ``target_bytes`` (:data:`TARGET_PARTITION_BYTES`, 128 MB) is the
+      guide's 100 MB-1 GB partition sizing for large inputs; once data
+      outgrows the cores the count grows as bytes/target (e.g. 100 TB ->
+      ~800k partitions), the textbook cluster posture.
     * Small data (sf0.1: 17.5 MB -> 9 partitions) gets the same count at
       ANY core count, so the driver's 8-core scaling run measures core
       scaling, not a partitioning constant tuned to one master.
 
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides outright (cluster
-    deployments that know their shuffle volume); with no readable input
-    dir the old cores floor applies.
+    deployments that know their shuffle volume) and must be an integer
+    >= 1, else ``ValueError``; with no readable input dir the old cores
+    floor applies.
     """
     env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if env:
-        return int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            n = 0
+        if n < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be an integer >= 1, got {env!r}"
+            )
+        return n
     size = _dir_bytes(os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     if size <= 0:
         return cpus
-    min_task = int(os.environ.get("SPARK_GRAFT_MIN_TASK_BYTES", str(2 * 1024**2)))
-    target = int(os.environ.get("SPARK_GRAFT_TARGET_PARTITION_BYTES", str(128 * 1024**2)))
-    by_overhead = max(1, -(-size // min_task))
-    by_size = max(cpus, -(-size // target))
+    by_overhead = max(1, -(-size // MIN_TASK_BYTES))
+    by_size = max(cpus, -(-size // TARGET_PARTITION_BYTES))
     return min(by_overhead, by_size)
 
 # Per-session memo of load_table's lazy source plans (see load_table).

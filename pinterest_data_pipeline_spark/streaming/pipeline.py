@@ -8,7 +8,8 @@ path (``pintrest_stream_data_transformation.py``, STREAM for short):
   to Kinesis (``{StreamName, Data, PartitionKey}``,
   ``python_files/user_posting_emulation_streaming.py:76-104``). A file source
   is the open-Spark equivalent: replayable, checkpointable offsets, and the
-  exact ``maxFilesPerTrigger`` batching knobs a Kafka/Kinesis source exposes.
+  same per-trigger admission limits a Kafka/Kinesis source exposes
+  (:func:`read_entity_stream`).
 * **Parse** (STREAM:54-56, S5-S7): CAST to string -> ``from_json`` with the
   explicit per-entity schema -> struct flatten.
 * **Clean** (STREAM:114-190, T4): the SAME projection chain the batch path
@@ -426,34 +427,43 @@ def availablenow_events_roundtrip(
     """
     import shutil
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..session import load_table
-
-    wire_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
     if os.path.exists(work_dir):
         shutil.rmtree(work_dir)
-    landing = os.path.join(work_dir, "landing", "events")
     out_dir = os.path.join(work_dir, "sink")
-    ckpt_dir = os.path.join(work_dir, "checkpoints")
+    subset = _event_wire_slice(spark, sf_dir, 20)
+    planted_dups = subset.filter(F.col("event_id") % 3 == 0)
+    typed = _wire_stream(
+        spark,
+        os.path.join(work_dir, "landing", "events"),
+        _to_wire(subset).unionAll(_to_wire(planted_dups)),
+    ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+    deduped = watermarked_dedup(typed, "ts", delay="1 day", keys=["event_id"]).drop(
+        "ts"
+    )
+    query = write_entity_stream(
+        deduped, "events", out_dir, os.path.join(work_dir, "checkpoints"),
+        available_now=True,
+    )
+    query.awaitTermination()
+    return spark.read.format(default_sink_format()).load(
+        os.path.join(out_dir, "events")
+    )
 
-    subset = (
+
+# Wire payload of the two text-envelope drivers: an ``events`` row with its
+# timestamp as epoch micros.
+_EVENT_WIRE_SCHEMA = (
+    "event_id long, user_id long, event_type string, ts_us long, value double"
+)
+
+
+def _event_wire_slice(spark: SparkSession, sf_dir: str, every: int) -> DataFrame:
+    """Every ``every``-th ``events`` row, projected to the wire payload."""
+    from ..session import load_table
+
+    return (
         load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 20 == 0)
+        .filter(F.col("event_id") % every == 0)
         .select(
             "event_id",
             "user_id",
@@ -462,36 +472,29 @@ def availablenow_events_roundtrip(
             "value",
         )
     )
-    def to_wire(df: DataFrame) -> DataFrame:
-        payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-        return df.select(
-            F.to_json(
-                F.struct(
-                    F.lit("events").alias("StreamName"),
-                    payload.alias("Data"),
-                    F.col("user_id").cast("string").alias("PartitionKey"),
-                )
-            ).alias("value")
-        )
 
-    lines = to_wire(subset)
-    planted_dups = to_wire(subset.filter(F.col("event_id") % 3 == 0))
-    lines.unionAll(planted_dups).coalesce(1).write.mode("overwrite").text(landing)
 
+def _to_wire(df: DataFrame) -> DataFrame:
+    """Serialize rows as ``{StreamName, Data, PartitionKey}`` envelope
+    lines, the shape the reference's Kinesis emulator PUTs."""
+    payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+    return df.select(
+        F.to_json(
+            F.struct(
+                F.lit("events").alias("StreamName"),
+                payload.alias("Data"),
+                F.col("user_id").cast("string").alias("PartitionKey"),
+            )
+        ).alias("value")
+    )
+
+
+def _wire_stream(spark: SparkSession, landing: str, lines: DataFrame) -> DataFrame:
+    """Land envelope ``lines`` as ONE text file (one micro-batch) and
+    return the typed payload stream over it."""
+    lines.coalesce(1).write.mode("overwrite").text(landing)
     raw = spark.readStream.format("text").load(landing)
-    typed = parse_envelope_payload(raw, wire_schema, "event_id").withColumn(
-        "ts", F.timestamp_micros(F.col("ts_us"))
-    )
-    deduped = watermarked_dedup(typed, "ts", delay="1 day", keys=["event_id"]).drop(
-        "ts"
-    )
-    query = write_entity_stream(
-        deduped, "events", out_dir, ckpt_dir, available_now=True
-    )
-    query.awaitTermination()
-    return spark.read.format(default_sink_format()).load(
-        os.path.join(out_dir, "events")
-    )
+    return parse_envelope_payload(raw, _EVENT_WIRE_SCHEMA, "event_id")
 
 
 def upsert_sink(
@@ -597,61 +600,18 @@ def availablenow_upsert_roundtrip(
     """
     import shutil
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..session import load_table
-
-    wire_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
     if os.path.exists(work_dir):
         shutil.rmtree(work_dir)
-    landing = os.path.join(work_dir, "landing", "events")
     table_dir = os.path.join(work_dir, "state", "latest_events")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "latest_events")
-
-    subset = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 10 == 0)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "value",
-        )
-    )
-    payload = F.to_json(F.struct(*[F.col(c) for c in subset.columns]))
-    subset.select(
-        F.to_json(
-            F.struct(
-                F.lit("events").alias("StreamName"),
-                payload.alias("Data"),
-                F.col("user_id").cast("string").alias("PartitionKey"),
-            )
-        ).alias("value")
-    ).coalesce(1).write.mode("overwrite").text(landing)
-
-    raw = spark.readStream.format("text").load(landing)
-    typed = parse_envelope_payload(raw, wire_schema, "event_id").withColumn(
-        "ord", F.struct(F.col("ts_us"), F.col("event_id"))
-    )
+    typed = _wire_stream(
+        spark,
+        os.path.join(work_dir, "landing", "events"),
+        _to_wire(_event_wire_slice(spark, sf_dir, 10)),
+    ).withColumn("ord", F.struct(F.col("ts_us"), F.col("event_id")))
     query = upsert_sink(
         typed,
         table_dir,
-        ckpt_dir,
+        os.path.join(work_dir, "checkpoints", "latest_events"),
         keys=["user_id"],
         available_now=True,
         order_col="ord",
@@ -678,13 +638,8 @@ def availablenow_incremental_rollup(
     dropped or duplicated a key the totals would diverge from the oracle's
     whole-table GROUP BY.
     """
-    import shutil
-
     from ..session import load_table
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "daily_rollup")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "daily_rollup")
 
@@ -710,20 +665,22 @@ def availablenow_incremental_rollup(
             )
         )
 
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        query = upsert_sink(
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            events.filter(F.col("event_id") <= mid),
+            events.filter(F.col("event_id") > mid),
+        ],
+        lambda stream: upsert_sink(
             rollup(stream),
             table_dir,
             ckpt_dir,
             keys=["day", "event_type"],
             available_now=True,
-        )
-        query.awaitTermination()
+        ),
+        landing="src",
+    )
     return spark.read.parquet(table_dir)
 
 
@@ -744,14 +701,9 @@ def availablenow_funnel_steps(
     emission touches only users seen in the batch, and the upsert rewrites
     only their keys — history is never re-read across triggers.
     """
-    import shutil
-
     from ..session import load_table
     from .stateful import funnel_first_times
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "funnel_times")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "funnel_times")
 
@@ -760,20 +712,22 @@ def availablenow_funnel_steps(
     )
     lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
     mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        query = upsert_sink(
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            events.filter(F.col("ts") <= F.lit(mid_ts)),
+            events.filter(F.col("ts") > F.lit(mid_ts)),
+        ],
+        lambda stream: upsert_sink(
             funnel_first_times(stream),
             table_dir,
             ckpt_dir,
             keys=["user_id"],
             available_now=True,
-        )
-        query.awaitTermination()
+        ),
+        landing="src",
+    )
     return spark.read.parquet(table_dir)
 
 
@@ -798,22 +752,13 @@ def availablenow_attribution_outer(
     sentinels' role and state stays bounded at horizon + watermark of
     history per side.
     """
-    import shutil
-
     from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "out")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
     mid_ts = lo + (hi - lo) / 2
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
     def sentinel(hours: int):
         # one heartbeat PER SIDE: the global watermark is the MIN over all
@@ -828,28 +773,25 @@ def availablenow_attribution_outer(
             " -2L, 'purchase', CAST(0.0 AS DOUBLE)"
         )
 
+    def sink(stream: DataFrame):
+        views = stream.filter(F.col("event_type") == "view")
+        purchases = stream.filter(F.col("event_type") == "purchase")
+        joined = attributed_conversions(views, purchases, how="leftOuter")
+        return write_entity_stream(
+            joined, "out", work_dir, os.path.join(work_dir, "ckpt"),
+            fmt="parquet", available_now=True,
+        )
+
     chunks = [
         events.filter(F.col("ts") <= F.lit(mid_ts)),
         events.filter(F.col("ts") > F.lit(mid_ts)),
         sentinel(8),
         sentinel(16),
     ]
-    for chunk in chunks:
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        views = stream.filter(F.col("event_type") == "view")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = attributed_conversions(views, purchases, how="leftOuter")
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    _run_landed(spark, work_dir, chunks, sink, landing="src")
+    return spark.read.parquet(os.path.join(work_dir, "out")).filter(
+        F.col("user_id") >= 0
+    )
 
 
 def availablenow_cms_rollup(
@@ -870,34 +812,31 @@ def availablenow_cms_rollup(
     volume. At 100 TB/day this maintains frequency estimates for an
     unbounded key domain in constant state and constant sink size.
     """
-    import shutil
-
     from ..operators import sketches
     from ..session import load_table
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "cms_cells")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "cms_cells")
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     mid = (events.agg(F.max("event_id")).first()[0] or 0) // 2
 
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema("event_id long, user_id long").parquet(src)
-        query = upsert_sink(
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            events.filter(F.col("event_id") <= mid),
+            events.filter(F.col("event_id") > mid),
+        ],
+        lambda stream: upsert_sink(
             sketches.cms_cells(stream, "user_id", depth=4, width=256),
             table_dir,
             ckpt_dir,
             keys=["row_idx", "bucket"],
             available_now=True,
-        )
-        query.awaitTermination()
+        ),
+        landing="src",
+    )
     return spark.read.parquet(table_dir)
 
 
@@ -915,14 +854,9 @@ def availablenow_tdigest_daily(
     ``applyInPandasWithState`` — together they cover both halves of the
     incremental-sketch story. Per-key state <= ~2*delta centroids.
     """
-    import shutil
-
     from ..session import load_table
     from .stateful import daily_quantile_digests
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "daily_digests")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "daily_digests")
 
@@ -930,23 +864,23 @@ def availablenow_tdigest_daily(
         "event_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("day"), "value"
     )
     mid = (events.agg(F.max("event_id")).first()[0] or 0) // 2
-    schema = "event_id long, day date, value double"
-
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        query = upsert_sink(
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            events.filter(F.col("event_id") <= mid),
+            events.filter(F.col("event_id") > mid),
+        ],
+        lambda stream: upsert_sink(
             daily_quantile_digests(stream.drop("event_id")),
             table_dir,
             ckpt_dir,
             keys=["day"],
             available_now=True,
             order_col="n_values",
-        )
-        query.awaitTermination()
+        ),
+        landing="src",
+    )
     return spark.read.parquet(table_dir)
 
 
@@ -971,20 +905,11 @@ def availablenow_session_rollup(
     different order than a batch sum — integer addition is the
     order-insensitive formulation; the read edge divides once.
     """
-    import shutil
-
     from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "out")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
     mid_ts = lo + (hi - lo) / 2
-    schema = "user_id long, ts timestamp, value double"
 
     def sentinel(hours: int):
         return spark.sql(
@@ -992,15 +917,7 @@ def availablenow_session_rollup(
             " CAST(0.0 AS DOUBLE) AS value"
         )
 
-    chunks = [
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-        sentinel(8),
-        sentinel(16),
-    ]
-    for chunk in chunks:
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
+    def sink(stream: DataFrame):
         sessions = (
             stream.withWatermark("ts", "1 hour")
             .groupBy(
@@ -1017,16 +934,21 @@ def availablenow_session_rollup(
                 "cents",
             )
         )
-        query = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return write_entity_stream(
+            sessions, "out", work_dir, os.path.join(work_dir, "ckpt"),
+            fmt="parquet", available_now=True,
         )
-        query.awaitTermination()
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+
+    chunks = [
+        events.filter(F.col("ts") <= F.lit(mid_ts)),
+        events.filter(F.col("ts") > F.lit(mid_ts)),
+        sentinel(8),
+        sentinel(16),
+    ]
+    _run_landed(spark, work_dir, chunks, sink, landing="src")
+    return spark.read.parquet(os.path.join(work_dir, "out")).filter(
+        F.col("user_id") >= 0
+    )
 
 
 def availablenow_dedup_rollup(
@@ -1051,13 +973,8 @@ def availablenow_dedup_rollup(
     log-ordered source provides. Downstream the upsert rewrites only the
     keys the new files touched, as in ``availablenow_incremental_rollup``.
     """
-    import shutil
-
     from ..session import load_table
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "dedup_rollup")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "dedup_rollup")
 
@@ -1070,13 +987,8 @@ def availablenow_dedup_rollup(
             F.to_date("ts").alias("day"), "event_type"
         ).groupBy("day", "event_type").agg(F.count(F.lit(1)).alias("event_count"))
     mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        noisy = chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
-        noisy.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
+
+    def sink(stream: DataFrame):
         deduped = stream.withWatermark("ts", "7 days").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
@@ -1085,14 +997,27 @@ def availablenow_dedup_rollup(
             .groupBy("day", "event_type")
             .agg(F.count(F.lit(1)).alias("event_count"))
         )
-        query = upsert_sink(
+        return upsert_sink(
             rollup,
             table_dir,
             ckpt_dir,
             keys=["day", "event_type"],
             available_now=True,
         )
-        query.awaitTermination()
+
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
+            for chunk in (
+                events.filter(F.col("ts") <= F.lit(mid_ts)),
+                events.filter(F.col("ts") > F.lit(mid_ts)),
+            )
+        ],
+        sink,
+        landing="src",
+    )
     return spark.read.parquet(table_dir)
 
 
@@ -1115,13 +1040,8 @@ def availablenow_bitmap_distinct(
     The popcount finalization runs on the maintained table, outside the
     stream.
     """
-    import shutil
-
     from ..session import load_table
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
     table_dir = os.path.join(work_dir, "state", "bitmap_distinct")
     ckpt_dir = os.path.join(work_dir, "checkpoints", "bitmap_distinct")
 
@@ -1135,13 +1055,8 @@ def availablenow_bitmap_distinct(
             F.lit(0).cast("long").alias("n_active"),
         ).limit(0)
     mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        noisy = chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
-        noisy.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
+
+    def sink(stream: DataFrame):
         words = (
             stream.withColumn("day", F.to_date("ts"))
             .withColumn("word", F.expr("user_id div 63").cast("long"))
@@ -1151,14 +1066,27 @@ def availablenow_bitmap_distinct(
             .groupBy("day", "word")
             .agg(F.bit_or("bit").alias("bits"))
         )
-        query = upsert_sink(
+        return upsert_sink(
             words,
             table_dir,
             ckpt_dir,
             keys=["day", "word"],
             available_now=True,
         )
-        query.awaitTermination()
+
+    _run_landed(
+        spark,
+        work_dir,
+        [
+            chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
+            for chunk in (
+                events.filter(F.col("ts") <= F.lit(mid_ts)),
+                events.filter(F.col("ts") > F.lit(mid_ts)),
+            )
+        ],
+        sink,
+        landing="src",
+    )
     return (
         spark.read.parquet(table_dir)
         .groupBy("day")
@@ -1207,8 +1135,8 @@ def incremental_dedup_store_sink(
 
     Determinism contract: decisions depend on micro-batch COMPOSITION
     (greedy-within-batch policy), so certifying runs must pin the
-    file-to-batch mapping (one landing file per arrival +
-    ``maxFilesPerTrigger=1``) — see
+    arrival-to-batch mapping (one ``availableNow`` run per arrival over
+    the sink's checkpoint) — see
     :func:`availablenow_incremental_dedup_roundtrip`.
 
     Scale shape per trigger: O(batch) signatures + the size-guarded
@@ -1269,12 +1197,12 @@ def availablenow_incremental_dedup_roundtrip(
     threshold: float = 0.3,
 ) -> DataFrame:
     """Drive :func:`incremental_dedup_store_sink` as one bounded,
-    oracle-checkable run: each ``arrivals`` frame lands as ONE file
-    (sequential writes, distinct mtimes) and ``maxFilesPerTrigger=1``
-    pins file == micro-batch, so arrival k IS batch k and the greedy
-    within-batch policy is deterministic cross-engine. ``work_dir``
-    (landing + checkpoint + store deltas + decisions) is wiped per call
-    — repeated driver/parity/bench invocations replay identically.
+    oracle-checkable run: each ``arrivals`` frame lands and drains in its
+    own ``availableNow`` run (:func:`_run_landed`), so arrival k IS batch
+    k and the greedy within-batch policy is deterministic cross-engine.
+    ``work_dir`` (landing + checkpoint + store deltas + decisions) is
+    wiped per call — repeated driver/parity/bench invocations replay
+    identically.
 
     Returns the accumulated decisions table with the directory-encoded
     ``batch`` id surfaced as ``arrival`` (1-based).
@@ -1334,27 +1262,30 @@ def _start_store_sink(
 
 
 def _run_landed(
-    spark: SparkSession, work_dir: str, arrivals: list[DataFrame], start_sink
+    spark: SparkSession,
+    work_dir: str,
+    arrivals: list[DataFrame],
+    start_sink,
+    landing: str = "landing",
 ) -> None:
-    """Wipe ``work_dir``, land each arrival frame as ONE file (sequential
-    writes, distinct mtimes), open a ``maxFilesPerTrigger=1`` file-source
-    stream over the landing dir and run ``start_sink(stream)`` to
-    completion — arrival k IS micro-batch k, the determinism pin every
-    oracle-checkable streaming roundtrip needs, and repeated runs replay
-    identically."""
+    """The bounded drive every ``availablenow_*`` roundtrip over parquet
+    arrivals shares: wipe ``work_dir``, then for each arrival in order
+    append it under ``work_dir/<landing>`` and run ``start_sink(stream)``
+    — one ``availableNow`` query over the sink's own checkpoint — to
+    completion. The checkpointed file source admits only files no earlier
+    run committed, so arrival k IS micro-batch k by construction (the
+    determinism pin every oracle-checkable roundtrip needs), and repeated
+    calls replay identically. Every run reads with the first arrival's
+    schema, as one query restarted over one checkpoint must."""
     import shutil
 
     if os.path.exists(work_dir):
         shutil.rmtree(work_dir)
-    landing = os.path.join(work_dir, "landing")
+    landing_dir = os.path.join(work_dir, landing)
     for arr in arrivals:
-        arr.coalesce(1).write.mode("append").parquet(landing)
-    stream = (
-        spark.readStream.schema(arrivals[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    start_sink(stream).awaitTermination()
+        arr.write.mode("append").parquet(landing_dir)
+        stream = spark.readStream.schema(arrivals[0].schema).parquet(landing_dir)
+        start_sink(stream).awaitTermination()
 
 
 def ivf_stream_upsert_sink(
@@ -1401,7 +1332,7 @@ def availablenow_ivf_upsert_roundtrip(
     centroids: list[list[float]],
 ) -> DataFrame:
     """Drive :func:`ivf_stream_upsert_sink` as one bounded run (one
-    landing file per arrival, file == micro-batch) and return the
+    ``availableNow`` run per arrival, arrival == micro-batch) and return the
     accumulated index DELTA (all committed batches, cell column intact).
     ``work_dir`` is wiped per call — repeated driver/parity/bench
     invocations replay identically."""
@@ -1474,7 +1405,7 @@ def availablenow_kmv_merge_roundtrip(
     k: int = 64,
 ) -> list[DataFrame]:
     """Drive :func:`kmv_stream_merge_sink` as one bounded run (one
-    landing file per arrival, file == micro-batch) and return the
+    ``availableNow`` run per arrival, arrival == micro-batch) and return the
     per-batch sketch VERSIONS in batch order (version i = the store
     sketch after arrival i). ``work_dir`` is wiped per call."""
     _run_landed(

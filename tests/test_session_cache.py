@@ -5,6 +5,7 @@ lineage cold."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark import session as S
@@ -97,3 +98,14 @@ def test_rowcount_memo_bounded(spark):
     finally:
         ext._ROWCOUNT_MEMO.clear()
         ext._ROWCOUNT_MEMO.update(saved)
+
+
+def test_shuffle_partitions_override_is_validated(monkeypatch):
+    """The env override is outside input: a positive integer is taken as
+    is, anything else is refused with the variable named."""
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16")
+    assert S.derived_shuffle_partitions(4) == 16
+    for bad in ("0", "-3", "eight"):
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+            S.derived_shuffle_partitions(4)

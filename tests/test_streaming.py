@@ -312,58 +312,6 @@ def test_checkpoint_makes_restart_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{out}/pin").count() == n_distinct
 
 
-def test_transform_with_state_matches_v1_semantics(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin: same running totals as the
-    applyInPandasWithState operator, accumulated across two drains.
-
-    The transformWithState Python state server speaks protobuf; this
-    container has no google.protobuf, so the test self-skips here and runs
-    wherever the dependency exists (it ships with real Spark clusters)."""
-    pytest.importorskip("google.protobuf")
-    from pinterest_data_pipeline_spark.streaming.stateful_v2 import (
-        ROCKSDB_PROVIDER_CONF,
-        running_user_totals_v2,
-    )
-
-    for k, v in ROCKSDB_PROVIDER_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "out")
-        schema = "user_id long, value double"
-
-        def run_batch(rows, run_tag):
-            spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-            q = (
-                running_user_totals_v2(spark.readStream.schema(schema).parquet(src))
-                .withColumn("run_tag", F.lit(run_tag))
-                .writeStream.foreachBatch(
-                    lambda batch, _id: batch.write.mode("append").parquet(out)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {
-                r.user_id: (r.n_events, r.total_value)
-                for r in spark.read.parquet(out)
-                .filter(F.col("run_tag") == run_tag)
-                .collect()
-            }
-
-        first = run_batch([(1, 2.0), (1, 3.0), (2, 10.0)], 1)
-        assert first[1] == (2, 5.0) and first[2] == (1, 10.0)
-        second = run_batch([(1, 1.0), (3, 7.0)], 2)
-        assert second[1] == (3, 6.0)  # state survived the restart
-        assert second[3] == (1, 7.0)
-        assert 2 not in second  # untouched key not re-emitted in update mode
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Stream-stream attribution join (two file-source streams) must emit
     exactly the batch dual's rows once both watermarks pass."""
@@ -946,3 +894,117 @@ def test_bitmap_distinct_state_bounded_by_key_domain(spark, tmp_path):
     assert _state_rows_total(q) == n_cells       # state == key domain
     total = got.agg(F.sum(F.bit_count("bits"))).first()[0]
     assert total == 3 * 200                      # exact distinct per day
+
+
+# --- bounded drivers vs their batch answers (sf0.001) -------------------------
+
+SF001 = "/root/testdata/sf0.001"
+
+
+def _events(spark):
+    from pinterest_data_pipeline_spark.session import load_table
+
+    return load_table(spark, SF001, "events")
+
+
+def test_upsert_roundtrip_keeps_latest_event_per_user(spark, tmp_path):
+    """The keyed-upsert driver's final table is the latest event per user
+    over the streamed every-10th slice, ordered by (ts_us, event_id)."""
+    out = streaming.pipeline.availablenow_upsert_roundtrip(
+        spark, SF001, str(tmp_path / "upsert")
+    )
+    got = sorted(
+        (r.user_id, r.event_id, r.event_type, r.ts_us, r.value)
+        for r in out.collect()
+    )
+    latest: dict = {}
+    for r in (
+        _events(spark)
+        .filter(F.col("event_id") % 10 == 0)
+        .select(
+            "user_id", "event_id", "event_type",
+            F.unix_micros("ts").alias("ts_us"), "value",
+        )
+        .collect()
+    ):
+        best = latest.get(r.user_id)
+        if best is None or (r.ts_us, r.event_id) > (best[3], best[1]):
+            latest[r.user_id] = tuple(r)
+    assert got == sorted(latest.values()) and len(got) > 1
+
+
+def test_incremental_rollup_driver_equals_whole_table_counts(spark, tmp_path):
+    """Two availableNow drains through the keyed upsert sink converge to
+    the whole-table day x event_type counts and integer cents."""
+    out = streaming.pipeline.availablenow_incremental_rollup(
+        spark, SF001, str(tmp_path / "mv")
+    )
+    got = {
+        (r.day, r.event_type): (r.event_count, r.value_cents)
+        for r in out.collect()
+    }
+    want: dict = {}
+    for r in _events(spark).select(
+        F.to_date("ts").alias("day"), "event_type", "value"
+    ).collect():
+        n, cents = want.get((r.day, r.event_type), (0, 0))
+        want[(r.day, r.event_type)] = (n + 1, cents + round(r.value * 100))
+    assert got == want and len(got) > 1
+
+
+def test_attribution_outer_driver_equals_batch_left_join(spark, tmp_path):
+    """The watermark-drained stream-stream outer join emits exactly the
+    batch LEFT JOIN of views to purchases within one hour."""
+    out = streaming.pipeline.availablenow_attribution_outer(
+        spark, SF001, str(tmp_path / "outer")
+    )
+    got = sorted(
+        tuple(r)
+        for r in out.select(
+            "view_id", "purchase_id", "user_id", "lag_seconds", "purchase_value"
+        ).collect()
+    )
+    ev = _events(spark)
+    v = ev.filter(F.col("event_type") == "view").alias("v")
+    p = ev.filter(F.col("event_type") == "purchase").alias("p")
+    want = sorted(
+        tuple(r)
+        for r in v.join(
+            p,
+            (F.col("v.user_id") == F.col("p.user_id"))
+            & (F.col("p.ts") >= F.col("v.ts"))
+            & (F.col("p.ts") <= F.col("v.ts") + F.expr("INTERVAL 1 HOUR")),
+            "left",
+        )
+        .select(
+            F.col("v.event_id"),
+            F.col("p.event_id"),
+            F.col("v.user_id"),
+            F.unix_timestamp("p.ts") - F.unix_timestamp("v.ts"),
+            F.round("p.value", 2),
+        )
+        .collect()
+    )
+    assert got == want
+    assert any(r[1] is None for r in got) and any(r[1] is not None for r in got)
+
+
+def test_session_rollup_driver_equals_batch_session_window(spark, tmp_path):
+    """Sessions maintained across two drains plus two heartbeats equal the
+    batch ``session_window`` sessions per user, with integer cents."""
+    out = streaming.pipeline.availablenow_session_rollup(
+        spark, SF001, str(tmp_path / "sessions")
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    want = sorted(
+        tuple(r)
+        for r in _events(spark)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        )
+        .select("user_id", F.col("w.start"), "n_events", "cents")
+        .collect()
+    )
+    assert got == want and len(got) > 1
